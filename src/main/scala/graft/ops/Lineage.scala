@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-superstep lineage truncation for iterative operators
   * ([[Dedup.clusters]], [[Dedup.simhashClusters]], [[Bpe.merges]],
@@ -52,6 +53,21 @@ object Lineage {
     * final action.
     */
   def cutLazy(df: DataFrame): DataFrame = cutImpl(df, eager = false)
+
+  /** Drop the stored blocks behind a frame returned by [[cut]] or
+    * [[cutLazy]] (and any `cache()` of it). A cut frame is a scan of a
+    * persisted RDD that `DataFrame.unpersist` does not reach, so an
+    * iterative operator calls this on each superstep's state once the
+    * next superstep's state is materialized. Release only state that
+    * nothing reads again: a truncated frame cannot recompute its blocks.
+    */
+  def release(df: DataFrame): Unit = {
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+    df.unpersist(blocking = false)
+  }
 
   private def cutImpl(df: DataFrame, eager: Boolean): DataFrame = {
     val s = df.sparkSession
