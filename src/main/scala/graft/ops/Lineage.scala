@@ -31,20 +31,27 @@ object Lineage {
   /** Cut `df`'s lineage, eagerly; reliable or local per session conf. */
   def cut(df: DataFrame): DataFrame = cutImpl(df, eager = true)
 
-  /** Cut `df`'s lineage WITHOUT forcing materialization now. The logical
+  /** Cut `df`'s lineage WITHOUT forcing its final stage now. The logical
     * plan is truncated immediately either way (both forms return a
-    * LogicalRDD, so the Catalyst re-analysis blow-up cannot happen); lazy
-    * skips the per-superstep job, so a fixed-round loop with no mid-loop
-    * action collapses R driver jobs into one final job — measured round 7
-    * on the q143/q160/q161 loops (SCALE.md). Convergence-style loops
-    * with an action per round (e.g. [[Dedup.clusters]]) ALSO prefer lazy:
-    * the round-8 directed A/B (SCALE.md r8 #1) measured eager cuts 1.5–3×
-    * slower across the clusters family (q94 8.3→24.2 s, q190 8.3→18.1 s,
-    * q65 2.9→9.8 s at sf0.1) — the eager localCheckpoint runs the
-    * superstep's plan as its OWN job and the fixpoint-sum action then
-    * reads the stored blocks, i.e. one extra scheduled job plus one
-    * extra block write/read per round, where the lazy form materializes
-    * inside the sum job it already runs. The benign `BlockManager:
+    * LogicalRDD, so the Catalyst re-analysis blow-up cannot happen).
+    * Lazy is not free of jobs: under adaptive execution the cut plans
+    * `df` at the call and runs every shuffle map stage of that plan
+    * there (an adaptive plan exists only once its stages have run), so
+    * only the final, post-exchange stage is deferred — it runs, and
+    * stores the cut's blocks, inside the next action that reads the
+    * cut. A cut over a plan with no exchange runs nothing at the call.
+    * Per superstep of `Dedup.minLabelFixpoint` that is 3 SQL
+    * executions and ~9 jobs on the benchmark's `corpus_dedup` workload,
+    * not one. Fixed-round loops with no mid-loop action measured faster
+    * lazy in round 7 (q143/q160/q161, SCALE.md). Convergence-style loops
+    * with an action per round (e.g. [[Dedup.clusters]]) still prefer
+    * lazy: the round-8 directed A/B (SCALE.md r8 #1) measured eager cuts
+    * 1.5–3× slower across the clusters family (q94 8.3→24.2 s, q190
+    * 8.3→18.1 s, q65 2.9→9.8 s at sf0.1) — the eager localCheckpoint
+    * also runs the final stage as its OWN job and the fixpoint-sum
+    * action then reads the stored blocks, i.e. one extra scheduled job
+    * plus one extra block write/read per round, where the lazy form runs
+    * that stage inside the sum job it already runs. The benign `BlockManager:
     * Block rdd_X already exists` warnings in bench tails are the lazy
     * first-action path double-reporting a stored partition, not
     * recomputation. Under `spark.graft.checkpoint.reliable=true` this
@@ -60,8 +67,15 @@ object Lineage {
     * iterative operator calls this on each superstep's state once the
     * next superstep's state is materialized. Release only state that
     * nothing reads again: a truncated frame cannot recompute its blocks.
+    *
+    * One release at a time in the process. Uncaching a frame makes Spark
+    * re-plan every cached frame built on it that is not fully stored yet:
+    * it removes that frame's entry and adds a re-planned one back. A
+    * concurrent release of that dependent frame can run in between, find
+    * no entry, and leave the re-added one cached for good; a later call
+    * that caches an equal plan then reuses it, stale physical plan and all.
     */
-  def release(df: DataFrame): Unit = {
+  def release(df: DataFrame): Unit = synchronized {
     df.queryExecution.logical match {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>

@@ -81,13 +81,39 @@ class OpsSpec extends SparkSpec {
     Dedup.minhashNearDuplicates(docs, "text", "doc_id",
       shingleSize = 3, numHashes = 64, bands = 32, threshold = 0.5).collect()
     Dedup.simhashNearDuplicates(docs, "text", "doc_id", 3).collect()
-    assert(Dedup.pinnedCacheCount == 4) // banded + candDocs + fpMat + keyed
-    assert(Dedup.releaseCaches() == 4)
+    // banded + candidate pairs + candDocs + fpMat + keyed
+    assert(Dedup.pinnedCacheCount == 5)
+    assert(Dedup.releaseCaches() == 5)
     assert(Dedup.pinnedCacheCount == 0)
     // released intermediates recompute: the operator still works
     val again = Dedup.simhashNearDuplicates(docs, "text", "doc_id", 3).collect()
     assert(again.nonEmpty || again.isEmpty) // executable, no cache error
     Dedup.releaseCaches()
+  }
+
+  test("concurrent releaseCaches leave no pinned frame cached") {
+    // Each thread pins a chain of frames, each built on the one before and
+    // none stored yet, and drains the shared queue, so the threads release
+    // each other's frames: uncaching a frame while another thread
+    // releases a frame built on it must not leave the latter cached.
+    Dedup.releaseCaches()
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val base = spark.range(0, 1000).toDF("id")
+    val threads = (1 to 4).map { t =>
+      new Thread(() => (1 to 25).foreach { i =>
+        val a = Dedup.pin(base.filter(col("id") % (100 * t + i) === 0))
+        val b = Dedup.pin(a.select((col("id") * 2).as("x")))
+        val c = Dedup.pin(b.filter(col("x") > 2))
+        Seq(a, b, c).foreach(pinned.add)
+        Dedup.releaseCaches()
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Dedup.releaseCaches()
+    val stillCached = pinned.toArray(Array.empty[org.apache.spark.sql.DataFrame])
+      .count(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(stillCached == 0)
   }
 
   test("simhash near-dup: identical-token docs at distance 0") {
