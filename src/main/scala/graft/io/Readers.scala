@@ -1,7 +1,15 @@
 package graft.io
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source operators S1–S5 (SURVEY.md §2.1).
   *
@@ -14,7 +22,11 @@ import org.apache.spark.sql.types.StructType
   * Scale note: CSV scans are file-parallel narrow reads; schema inference is
   * deliberately NOT enabled (it would add a full extra pass over 100 TB of
   * input). String-typed ingest + explicit downstream casts is both the
-  * reference's semantics and the cheaper plan.
+  * reference's semantics and the cheaper plan. A header-ful read WITHOUT
+  * a schema still runs one Spark job per call, to read the header line
+  * (and a parquet read without one runs a job to read a footer); bronze
+  * therefore passes [[csvHeaderSchema]] (and silver [[parquetFooterSchema]]),
+  * which resolve the same schema on the driver.
   */
 object Readers {
 
@@ -25,6 +37,27 @@ object Readers {
       .option("header", header.toString)
       .option("sep", delimiter)
     schema.fold(r)(s => r.schema(s)).csv(path)
+  }
+
+  /** The all-string schema a header-ful [[csv]] read of one file infers,
+    * resolved on the driver instead of through Spark's `take(1)` job: the
+    * first non-empty line (decompressed by its extension) → the univocity
+    * parser → Spark's safe-header renaming (empty names become `_c<i>`,
+    * duplicates get their index appended). These are the steps
+    * `TextInputCSVDataSource.inferFromDataset` takes when `inferSchema` is
+    * off; an empty file gives the empty schema, as there.
+    */
+  def csvHeaderSchema(spark: SparkSession, path: String,
+                      delimiter: String = ","): StructType = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true", "sep" -> delimiter),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val firstRow = CSVUtils.readHeaderLine(new Path(path), opts, spark.sessionState.newHadoopConf())
+      .map(new CsvParser(opts.asParserSettings).parseLine(_))
+      .filter(_ != null)
+    StructType(firstRow.toSeq.flatMap(row =>
+      CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, opts)
+        .map(StructField(_, StringType))))
   }
 
   /** S1: tab-separated (banks, G0a:26). */
@@ -63,6 +96,28 @@ object Readers {
   def parquetWithSchema(spark: SparkSession, path: String,
                         schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(path)
+
+  /** The schema [[parquet]] infers for an unpartitioned parquet directory
+    * (or one file), read on the driver instead of through Spark's footer
+    * job: the footer of the first data file by path, which is the file
+    * `ParquetUtils.inferSchema` reads when `mergeSchema` is off and no
+    * summary file exists (Spark writes none by default). Hidden files
+    * (`_SUCCESS`, `.crc`) are skipped as the file index skips them.
+    */
+  def parquetFooterSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val first = root.getFileSystem(conf).listStatus(root)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.toString)
+      .headOption
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** CSV ingest that CAPTURES malformed rows instead of dropping or dying:
     * PERMISSIVE mode with a corrupt-record column, so a quarantine branch

@@ -20,8 +20,10 @@ import graft.quality.Expectations.Suite
   * Scale notes: every stage is a narrow map except the gold aggregate
   * (the single guaranteed shuffle, SURVEY §3.3). Unlike the reference, the
   * DQ checkpoint validates the in-memory frame BEFORE writing (one scan, no
-  * re-read, SURVEY §4.2), and joined results are cached once instead of
-  * recomputed per action (E4:32,61 recompute — a known inefficiency).
+  * re-read, SURVEY §4.2). Gold's join feeds a single aggregate, so it is
+  * not cached: a cache would only add a job to fill it and stop the scans
+  * below it from pruning columns. Bronze and silver resolve their input
+  * schemas on the driver, so each layer write is the stage's only job.
   */
 object Medallion {
 
@@ -42,10 +44,13 @@ object Medallion {
   /** Bronze: read each landing file (all-string), harmonize schemas by
     * padding missing string columns with '' (G0a:56-57), union by name
     * (vs the reference's order-dependent positional union, SURVEY §4.4-d),
-    * write parquet.
+    * write parquet. Each file's schema comes from its header line, read on
+    * the driver ([[Readers.csvHeaderSchema]]).
     */
   def bronze(spark: SparkSession, spec: BronzeSpec): DataFrame = {
-    val frames = spec.source.paths.map(p => Readers.csv(spark, p, spec.source.delimiter))
+    val delim = spec.source.delimiter
+    val frames = spec.source.paths.map(p =>
+      Readers.csv(spark, p, delim, schema = Some(Readers.csvHeaderSchema(spark, p, delim))))
     val unioned = Harmonize.unionAll(frames)
     Writers.parquet(unioned, spec.out, SaveMode.Overwrite)
   }
@@ -53,10 +58,12 @@ object Medallion {
   /** Silver: one Project for renames+rules+derivations; the DQ suite is
     * collected via `observe()` DURING the layer write itself — zero
     * dedicated validation scans (vs the reference's one job per
-    * expectation over a re-read file, SURVEY §4.2).
+    * expectation over a re-read file, SURVEY §4.2). The bronze schema is
+    * read from a footer on the driver ([[Readers.parquetFooterSchema]]).
     */
   def silver(spark: SparkSession, spec: SilverSpec): DataFrame = {
-    val raw = Readers.parquet(spark, spec.in)
+    val raw = Readers.parquetWithSchema(spark, spec.in,
+      Readers.parquetFooterSchema(spark, spec.in))
     val named = Normalize.rename(Normalize.columns(raw), spec.renames: _*)
     val cleaned = Canonicalize(named, spec.rules)
     val derived = spec.derived.foldLeft(cleaned) { case (d, (name, f)) =>
@@ -95,7 +102,6 @@ object Medallion {
     val joined = fact
       .join(dimInner, Seq(spec.innerKey), "inner")
       .join(dimLeft, Seq(spec.leftKey), "left")
-      .cache() // E4 recomputes this per action; cache once instead
     val report = joined.select(spec.reportCols.map {
       case (in, pretty) => col(in).as(pretty)
     }: _*)

@@ -20,10 +20,11 @@ object FatDelete {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
     else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .appName("graft-fatdelete")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", false)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

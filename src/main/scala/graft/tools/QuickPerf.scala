@@ -12,11 +12,11 @@ object QuickPerf {
     val names = if (args.nonEmpty) args.toSeq
     else Seq("q24_simsearch_brute", "q25_simsearch_lsh", "q40_simsearch_ivf")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .appName("graft-quickperf")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SQL_SHUFFLE", "32").toInt)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", false)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.io.Readers
+import graft.ops.Footprint
 import graft.transform.{Canonicalize, Enrich}
 import graft.quality.Expectations._
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -43,7 +46,12 @@ class PipelineSpec extends SparkSpec {
   test("bronze: csv variants → harmonized parquet (G0a analog)") {
     bronze(spark, BronzeSpec(CsvSource(Seq(banksLanding), "\t"), s"$root/bronze/banks"))
     bronze(spark, BronzeSpec(CsvSource(Seq(claimsLanding), ","), s"$root/bronze/claims"))
-    bronze(spark, BronzeSpec(CsvSource(Seq(emp1, emp2), "|"), s"$root/bronze/employees"))
+    // header schemas are resolved on the driver: the layer write is the
+    // only job (a header sniff per file would add one each)
+    val fp = Footprint.of(spark) {
+      bronze(spark, BronzeSpec(CsvSource(Seq(emp1, emp2), "|"), s"$root/bronze/employees"))
+    }
+    assert(fp.jobs == 1, s"bronze over two files ran ${fp.jobs} jobs")
 
     val emp = spark.read.parquet(s"$root/bronze/employees")
     assert(emp.columns.toSet == Set("employer_name", "Geral", "CNPJ", "Segmento"))
@@ -52,9 +60,18 @@ class PipelineSpec extends SparkSpec {
     assert(emp.filter(col("CNPJ") === "" || col("Segmento") === "").count() == 2)
   }
 
+  test("footer schema equals the inferred parquet schema on every bronze layer") {
+    val layers = Seq("banks", "claims", "employees").map(l => s"$root/bronze/$l")
+    val empty = s"$root/bronze/empty"
+    spark.read.parquet(layers.last).limit(0).write.mode("overwrite").parquet(empty)
+    // StructType equality covers names, types, nullability and metadata
+    for (dir <- layers :+ empty)
+      assert(Readers.parquetFooterSchema(spark, dir) == spark.read.parquet(dir).schema, dir)
+  }
+
   test("silver: normalize + canonicalize + derive + DQ report (E1 analog)") {
     val reportDir = s"$root/dq"
-    silver(spark, SilverSpec(
+    val fp = Footprint.of(spark)(silver(spark, SilverSpec(
       in = s"$root/bronze/banks",
       out = s"$root/silver/banks",
       rules = Seq(Canonicalize.Rule("nome", " - PRUDENCIAL", "")),
@@ -63,7 +80,10 @@ class PipelineSpec extends SparkSpec {
       suite = Some(Suite("banks_silver", Seq(
         NotNull("nome"), NotNull("cnpj"), NotNull("nome_fantasia"),
         ColumnExists("segmento")))),
-      reportDir = Some(reportDir)))
+      reportDir = Some(reportDir))))
+    // the bronze schema comes from a footer read on the driver, and the DQ
+    // suite rides the write: one job
+    assert(fp.jobs == 1, s"silver ran ${fp.jobs} jobs")
 
     val silverDf = spark.read.parquet(s"$root/silver/banks")
     assert(silverDf.columns.toSet ==
@@ -119,7 +139,9 @@ class PipelineSpec extends SparkSpec {
     val employees = spark.read.parquet(s"$root/silver/employees")
       .select(col("employer_name").as("nome"), col("geral"))
 
-    val out = gold(claims, banks, employees,
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    val goldDf = gold(claims, banks, employees,
       GoldSpec(
         innerKey = "cnpj",
         leftKey = "nome", // GAMA has no employee row → null left side
@@ -132,8 +154,11 @@ class PipelineSpec extends SparkSpec {
         averages = Seq(
           "Índice de reclamações" -> "Média do Índice",
           "Índice de satisfação dos funcionários" -> "Média de Satisfação")))
-      .orderBy(col("Classificação"))
-      .collect()
+    val out = goldDf.orderBy(col("Classificação")).collect()
+    // the join feeds one aggregate: no cache in the plan, none left behind
+    assert(goldDf.queryExecution.optimizedPlan
+      .collectFirst { case r: InMemoryRelation => r }.isEmpty)
+    assert(sc.getPersistentRDDs.keySet == cachedBefore)
 
     assert(out.length == 2)
     assert(out(0).getString(0) == "Bancos")
