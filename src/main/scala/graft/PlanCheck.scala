@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for headline queries so the
   * shuffle/broadcast/pushdown story can be inspected and tuned
   * (`sbt "runMain graft.PlanCheck [sfDir] [query ...]"`).
@@ -17,14 +15,7 @@ object PlanCheck {
         "q118_passage_dedup", "q123_winsorize_quality", "q124_bloom_semi_join",
         "q126_token_surprisal", "q147_pii_scrub", "q148_sequence_pack",
         "q151_domain_blocklist", "q152_cdc_chunks", "q154_cdc_sync")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-plancheck")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       Queries.all(n)(spark, sfDir).explain("formatted")

@@ -12,8 +12,8 @@ import graft.streaming.{EventStreams, Staging}
   *
   * Mechanical split of the former single-file catalog (r10 verdict
   * hygiene note): one trait per family, linear chain, zero behavior
-  * change. `Queries` mixes the chain in; entries register in
-  * `Queries.all` / `Queries.oracles`.
+  * change. `Queries` mixes the chain in; each query registers once in
+  * `Queries.declared`, plan and oracle SQL together.
   */
 trait QueriesCorpusStats extends QueriesCorpus {
   // ===================================================== round-6 additions

@@ -12,8 +12,8 @@ import graft.streaming.{EventStreams, Staging}
   *
   * Mechanical split of the former single-file catalog (r10 verdict
   * hygiene note): one trait per family, linear chain, zero behavior
-  * change. `Queries` mixes the chain in; entries register in
-  * `Queries.all` / `Queries.oracles`.
+  * change. `Queries` mixes the chain in; each query registers once in
+  * `Queries.declared`, plan and oracle SQL together.
   */
 trait QueriesIngest extends QueriesRelational {
   // ==================================================== CSV ingest gates
@@ -125,8 +125,7 @@ trait QueriesIngest extends QueriesRelational {
     * filter, and emit `pruned` = whether the executed plan answered the
     * filter via PartitionFilters (directory pruning — the scan must touch
     * ONE partition, not the corpus). The oracle asserts TRUE, so a
-    * pruning regression is a hash mismatch, not a silent slowdown —
-    * PartitionDemo's evidence promoted to a driver-checked row.
+    * pruning regression is a hash mismatch, not a silent slowdown.
     */
   val partitionedPruning: Q = (s, dir) => {
     val tmp = scratch("graft_part_gate").toString

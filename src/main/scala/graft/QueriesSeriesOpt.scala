@@ -12,8 +12,8 @@ import graft.streaming.{EventStreams, Staging}
   *
   * Mechanical split of the former single-file catalog (r10 verdict
   * hygiene note): one trait per family, linear chain, zero behavior
-  * change. `Queries` mixes the chain in; entries register in
-  * `Queries.all` / `Queries.oracles`.
+  * change. `Queries` mixes the chain in; each query registers once in
+  * `Queries.declared`, plan and oracle SQL together.
   */
 trait QueriesSeriesOpt extends QueriesMultimodal {
   /** Autocorrelation function of the daily event-count series, lags
@@ -416,7 +416,7 @@ trait QueriesSeriesOpt extends QueriesMultimodal {
     * aggregation, so same-(window, type) rows arriving in one
     * micro-batch merge before being dropped and the metric counts
     * dropped GROUPS per batch, not raw input rows (probed empirically
-    * via [[StreamLateProbe]]: 105 late input rows report 104 — two
+    * from the per-batch progress: 105 late input rows report 104 — two
     * same-window clicks merged).
     * Kept-window counts, kept cents, and the dropped-group count must
     * all match the metric exactly.

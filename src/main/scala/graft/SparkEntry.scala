@@ -10,9 +10,10 @@ object SparkEntry {
     Queries.goldFlagship(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    Queries.all.map { case (name, q) => name -> q.oracleSql }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.io.{DeleteVectors, SnapshotLog, Writers}
 import graft.io.SnapshotLog.FileEntry
@@ -20,14 +19,7 @@ object FatDelete {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
     else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .appName("graft-fatdelete")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-fatdelete")
     for (dir <- dirs; rep <- 1 to 2) {
       val store = java.nio.file.Files
         .createTempDirectory("graft_fatdel").toString + "/docs"

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job profiler for one catalog query: runs the named queries once
   * (after a warm-up) with a listener that records every job's wall time
@@ -14,14 +13,7 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Seq("q01_gold_flagship")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .appName("graft-profile")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-profile")
     case class Job(id: Int, desc: String, start: Long, var end: Long)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     spark.sparkContext.addSparkListener(new SparkListener {

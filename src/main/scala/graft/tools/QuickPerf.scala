@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch timing harness: run a named subset of SparkEntry.queries a few
   * times each in one JVM and print per-run wall times — used to attribute
   * per-query cost without full-bench noise. Not part of the driver contract.
@@ -12,14 +10,7 @@ object QuickPerf {
     val names = if (args.nonEmpty) args.toSeq
     else Seq("q24_simsearch_brute", "q25_simsearch_lsh", "q40_simsearch_ivf")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .appName("graft-quickperf")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-quickperf")
     // warm-up: JVM + codegen paths
     graft.SparkEntry.queries("q01_gold_flagship")(spark, sfDir).collect()
     for (n <- names; r <- 1 to reps) {

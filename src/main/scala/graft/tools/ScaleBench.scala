@@ -286,13 +286,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleBench <dir1> [dir2 ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-scalebench")
     // optional comma-separated op filter (SPARK_GRAFT_SCALE_OPS) for
     // measuring one family without paying for the whole suite
     val selected = sys.env.get("SPARK_GRAFT_SCALE_OPS")

@@ -22,6 +22,19 @@ class CatalogSpec extends SparkSpec {
     assert(SparkEntry.queries.keys.forall(_.matches("q\\d+_[a-z0-9_]+")))
   }
 
+  test("the declared registry holds 376 distinct names, one plan each") {
+    val names = Queries.declared.map(_._1)
+    val repeated = names.diff(names.distinct)
+    assert(repeated.isEmpty, s"names declared twice: $repeated")
+    assert(names.size == 376)
+    val sharedPlans = for {
+      ((a, qa), i) <- Queries.declared.zipWithIndex
+      ((b, qb), j) <- Queries.declared.zipWithIndex
+      if i < j && (qa.plan eq qb.plan)
+    } yield s"$a = $b"
+    assert(sharedPlans.isEmpty, s"one plan under two names: $sharedPlans")
+  }
+
   test("every query plans and yields a duplicate-free schema at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sfDir)

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Uses `GraftExtensions.install` on whatever session is live — builder
   * extensions only bind at first creation, and in a full test run another
   * suite has usually created the session already (getOrCreate would
-  * silently skip them). The builder/config path is exercised at runtime by
-  * `graft.ExtDemo`.
+  * silently skip them), so the `spark.sql.extensions` config path itself
+  * is not exercised here.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
