@@ -105,6 +105,8 @@ trait QBase {
     * compaction per partition directory), join all, rethrow the first
     * failure. Spark's scheduler interleaves the jobs (guide §2.6);
     * FIFO scheduling back-fills each job's task tail with the next's.
+    * Pins are per thread: a unit that pins must release them itself
+    * (`Dedup.releaseCaches` on the caller drops none of them).
     */
   protected def inParallelAll(units: Seq[() => Unit]): Unit = {
     if (units.isEmpty) return

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions
 
@@ -20,8 +20,15 @@ object Dedup {
   // lineage-cut state of the fixpoint operators. They back the returned
   // LAZY frames, so the operator can't release them itself; callers
   // release them once results are consumed (VERDICT r1 #10).
-  private val pinnedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  //
+  // Each thread keeps its own pins, and only that thread's release drops
+  // them: a call running beside it on another thread keeps its state.
+  // A thread that pins must release on the same thread (in a `finally`
+  // where a timeout may interrupt it); nothing else will.
+  private val pinnedCaches = new ThreadLocal[java.util.ArrayDeque[DataFrame]] {
+    override def initialValue(): java.util.ArrayDeque[DataFrame] =
+      new java.util.ArrayDeque[DataFrame]()
+  }
 
   /** Cache a frame that feeds multiple consumers of one query (both sides
     * of a self-join, or a build+probe pair) and register it for the
@@ -31,28 +38,29 @@ object Dedup {
     */
   private[graft] def pin(df: DataFrame): DataFrame = {
     val cached = df.cache()
-    pinnedCaches.add(cached)
+    pinnedCaches.get.add(cached)
     cached
   }
 
-  /** Release every intermediate pinned by dedup calls since the last
-    * release (cached frames and cut fixpoint states). Safe any time: a
-    * released cache that is re-used recomputes instead of failing.
-    * Returns how many frames were dropped.
+  /** Release every intermediate pinned on this thread since its last
+    * release (cached frames and cut fixpoint states). Pins made on other
+    * threads stay. Safe any time: a released cache that is re-used
+    * recomputes instead of failing. Returns how many frames were dropped.
     */
   def releaseCaches(): Int = {
+    val mine = pinnedCaches.get
     var n = 0
-    var df = pinnedCaches.poll()
+    var df = mine.poll()
     while (df != null) {
       Lineage.release(df)
       n += 1
-      df = pinnedCaches.poll()
+      df = mine.poll()
     }
     n
   }
 
-  /** Number of currently pinned dedup caches (test/monitoring hook). */
-  def pinnedCacheCount: Int = pinnedCaches.size()
+  /** Number of frames pinned on this thread (test/monitoring hook). */
+  def pinnedCacheCount: Int = pinnedCaches.get.size
 
   // ---------------------------------------------------------------- exact
 
@@ -401,35 +409,41 @@ object Dedup {
     try {
     val keyed = pin(reps.select(col("id"), col("fp"), chunkKeys)
       .repartition(loopParts, col("chunk"), col("ck")))
-    val labels = minLabelFixpoint(
-        reps.select(col("id"), col("fp"), col("id").as("cluster_id")),
-        maxSupersteps) { frontier =>
-      val probe = frontier.select(col("id"), col("fp"), col("cluster_id"), chunkKeys)
-      // implicit-edge neighborhood min: the quadratic probe stream exists
-      // only inside the join -> partial agg pipeline (no firstMatch
-      // needed: duplicate probe hits are absorbed by min()). The receive
-      // (l) side needs no label at all — only (id, fp, chunk, ck).
-      // merge-join pinned: the receive side is the cached chunk table,
-      // whose accurate (small-at-gate-SF) size estimate otherwise flips
-      // the planner to broadcasting it — wrong twice over: at 100 TB the
-      // chunk table cannot broadcast, and even here the hot pigeonhole
-      // buckets make HashedRelation chain-walks ~5× slower than sorted
-      // group merges (measured 10×: supersteps 2-4 at 25-40 s under the
-      // broadcast plan vs ~6 s merged)
+    // implicit-edge neighborhood min of `probe` (id, fp, cluster_id,
+    // chunk, ck): the quadratic probe stream exists only inside the
+    // join -> partial agg pipeline (no firstMatch needed: duplicate probe
+    // hits are absorbed by min()). The receive (l) side needs no label at
+    // all — only (id, fp, chunk, ck).
+    // merge-join pinned: the receive side is the cached chunk table,
+    // whose accurate (small-at-gate-SF) size estimate otherwise flips
+    // the planner to broadcasting it — wrong twice over: at 100 TB the
+    // chunk table cannot broadcast, and even here the hot pigeonhole
+    // buckets make HashedRelation chain-walks ~5× slower than sorted
+    // group merges (measured 10×: supersteps 2-4 at 25-40 s under the
+    // broadcast plan vs ~6 s merged)
+    def neighborMin(probe: DataFrame): DataFrame =
       keyed.hint("merge").as("l")
         .join(probe.as("r"), col("l.chunk") === col("r.chunk") &&
           col("l.ck") === col("r.ck") && col("l.id") =!= col("r.id") &&
           bit_count(col("l.fp").bitwiseXOR(col("r.fp"))) <= maxHammingDistance)
         .groupBy(col("l.id").as("nid"))
         .agg(min(col("r.cluster_id")).as("nmin"))
+    // the first frontier is every rep at its seed label: `keyed` itself,
+    // already partitioned on (chunk, ck), probes both sides of the merge
+    // join with no exchange; later frontiers are chunk-projected and
+    // shuffled into it
+    val labels = minLabelFixpoint(
+        reps.select(col("id"), col("fp"), col("id").as("cluster_id")),
+        neighborMin(keyed.withColumn("cluster_id", col("id"))), maxSupersteps) {
+      frontier => neighborMin(frontier.select(col("id"), col("fp"), col("cluster_id"), chunkKeys))
     }
     // fan the rep labels back out: one keyed join on the 8-byte fp (the
     // state covers every rep, so it is total), never on text
     fpMat.join(labels.select(col("fp"), col("cluster_id")), Seq("fp"))
       .select(col("id"), col("cluster_id"))
     // the conf restore below runs before the caller's action: only the
-    // loop's own jobs (every superstep materializes inside its label
-    // sum) execute at loopParts; the returned lazy frame plans at the
+    // loop's own jobs (every superstep materializes in its eager cut)
+    // execute at loopParts; the returned lazy frame plans at the
     // caller's session value, exactly as before
     } finally session.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
@@ -450,7 +464,9 @@ object Dedup {
     * per vertex: a unique `id`, any payload columns the probe needs, and
     * the seed `cluster_id`. `neighborMin(frontier)` returns, per vertex
     * `nid`, the minimum label `nmin` among its neighbors in `frontier`
-    * (a frame with `init`'s columns).
+    * (a frame with `init`'s columns); `seedNeighborMin` is the same
+    * frame for the first superstep, whose frontier is every vertex at
+    * its seed label, in whatever form is cheapest there.
     *
     * One superstep:
     *  1. probe: `neighborMin` over the frontier;
@@ -459,58 +475,59 @@ object Dedup {
     *     the pointer-halving self-join read ONE lazily checkpointed copy:
     *     planned inline, column pruning makes the two sides differ, Spark
     *     reuses no exchange and each side runs the whole probe. Its
-    *     blocks are dropped right after the step's label sum;
+    *     blocks are dropped once step 4 has stored the halved state;
     *  3. pointer halving: adopt the label OF the current label. Exactly
     *     ONE halving per superstep — round-14 A/B: zero halvings fail to
     *     converge in 10 rounds (long label chains); two still need 6
     *     rounds but pay an extra join in each (~1.7× slower): the chain
     *     collapse is bounded by how fast the probe DELIVERS new minima,
     *     not by jump depth;
-    *  4. a lazy lineage cut. The exact decimal label sum is the step's
-    *     action and its convergence certificate: labels only decrease, so
-    *     an unchanged sum is the fixpoint. "Lazy" defers only the final
-    *     stage: under adaptive execution a `localCheckpoint(eager =
-    *     false)` runs its plan's shuffle map stages at the call, so a
-    *     superstep is several jobs (on the benchmark's `corpus_dedup`
-    *     workload: 3 SQL executions, ~9 jobs) — the two cuts' map
-    *     stages, then the sum, inside whose job the cut's final stage
-    *     stores its blocks.
+    *  4. an eager lineage cut that also certifies convergence. The job
+    *     that stores the halved state counts, through an observed
+    *     `count_if(cluster_id < old_label)`, the vertices whose label
+    *     dropped in this superstep. Labels only decrease, so a count of 0
+    *     is exactly the fixpoint (the superstep at which a label sum
+    *     would be unchanged), and no second query reads the state to learn
+    *     it. Under adaptive execution the lazy cut of step 2 runs its
+    *     plan's shuffle map stages at the call and its final stage inside
+    *     this cut's job, so a superstep is 2 SQL executions (8 jobs on
+    *     `FixpointSpec`'s chain fixture at `local[4]`, where a label-sum
+    *     query per superstep made 3 executions and 9 jobs).
     *
     * Delta iteration (round 15, VERDICT r14 #3; Ewen et al., "Spinning
     * Fast Iterative Data Flows", VLDB '12): the frontier is the vertices
     * whose label DECREASED in the last superstep — a filter on the cut
-    * state, `cluster_id < old_label` (the first superstep's frontier is
-    * every vertex). Only a changed label can deliver a NEW neighborhood
-    * minimum: an unchanged neighbor's label was already folded into this
-    * vertex's label by the superstep after it last changed (the first
-    * superstep delivers every seed; labels only decrease). Restricting
-    * the probe to the frontier is therefore exact — per-superstep labels,
-    * hence the label-sum certificates and the superstep count, equal the
-    * full probe's — and after the first superstep the probe touches only
-    * the frontier's neighborhoods.
+    * state, `cluster_id < old_label`. The first superstep reads
+    * `seedNeighborMin` instead ([[simhashClusters]] probes its chunk
+    * table against itself with no exchange, [[clusters]] takes each
+    * vertex's least neighbor id with no join). Only
+    * a changed label can deliver a NEW neighborhood minimum: an
+    * unchanged neighbor's label was already folded into this vertex's
+    * label by the superstep after it last changed (the first superstep
+    * delivers every seed; labels only decrease). Restricting the probe
+    * to the frontier is therefore exact — per-superstep labels, hence the
+    * certificates and the superstep count, equal the full probe's — and
+    * after the first superstep the probe touches only the frontier's
+    * neighborhoods.
     *
     * Each superstep's state is released once the next one is
     * materialized. The returned final state (`init`'s columns plus
     * `old_label`) backs the caller's lazy result, so it is registered
     * for [[releaseCaches]].
     */
-  private def minLabelFixpoint(init: DataFrame, maxSupersteps: Int)(
+  private def minLabelFixpoint(init: DataFrame, seedNeighborMin: DataFrame,
+                               maxSupersteps: Int)(
       neighborMin: DataFrame => DataFrame): DataFrame = {
     val cols = init.columns.toSeq.map(col)
     val payload = init.columns.toSeq.filter(_ != "cluster_id")
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      // coalesce: sum over an EMPTY vertex set is NULL — an empty graph
-      // must converge immediately, not NPE in the fixpoint compare
-      df.agg(coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
     var state = init.transform(Lineage.cutLazy)
-    var frontier = state
-    var prevSum = labelSum(state)
     var step = 0
     var done = false
     while (!done && step < maxSupersteps) {
       val labels = state.select(cols: _*)
-      val nbr = neighborMin(frontier)
+      val nbr =
+        if (step == 0) seedNeighborMin
+        else neighborMin(state.filter(col("cluster_id") < col("old_label")).select(cols: _*))
       val viaNbr = labels.join(nbr, labels("id") === nbr("nid"), "left")
         .select(payload.map(labels(_)) :+ labels("cluster_id").as("old_label") :+
           least(labels("cluster_id"), coalesce(nbr("nmin"), labels("cluster_id")))
@@ -518,22 +535,21 @@ object Dedup {
         .localCheckpoint(eager = false)
       val next = try {
         val links = viaNbr.select(col("id").as("pid"), col("cluster_id").as("plabel"))
+        val lowered = Observation()
         val halved = viaNbr.join(links, viaNbr("cluster_id") === links("pid"), "left")
           .select(payload.map(viaNbr(_)) :+ viaNbr("old_label") :+
             least(viaNbr("cluster_id"), coalesce(links("plabel"), viaNbr("cluster_id")))
               .as("cluster_id"): _*)
-          .transform(Lineage.cutLazy)
-        val nextSum = labelSum(halved)
-        done = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
+          .observe(lowered, count_if(col("cluster_id") < col("old_label")).as("n"))
+          .transform(Lineage.cut)
+        done = lowered.get("n") == 0L
         halved
       } finally Lineage.release(viaNbr)
       Lineage.release(state)
       state = next
-      frontier = next.filter(col("cluster_id") < col("old_label")).select(cols: _*)
       step += 1
     }
-    pinnedCaches.add(state)
+    pinnedCaches.get.add(state)
     state
   }
 
@@ -602,25 +618,24 @@ object Dedup {
     // same role is played by checkpoint()/intermediate tables.
     // both directions of each pair from ONE read of `pairs` (a union of
     // two projections reads them twice, unless Spark happens to reuse
-    // an exchange below them)
-    val symRaw = pairs.select(explode(array(
+    // an exchange below them), partitioned on the probe key `b` and cut
+    // once; adaptive execution sizes the partitions to the edge list, a
+    // tiny fraction of the corpus
+    val sym = pairs.select(explode(array(
         struct(col(id1Col).as("a"), col(id2Col).as("b")),
         struct(col(id2Col).as("a"), col(id1Col).as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
+      .repartition(col("b"))
       .transform(Lineage.cut)
-    // adaptive parallelism: the vertex set is a tiny fraction of the
-    // corpus; size the superstep shuffles to it (~1M edges/partition),
-    // not to the session-wide shuffle.partitions
-    val nEdges = symRaw.count()
-    val parts = math.max(1L, nEdges / 1000000L).toInt
-    val sym = symRaw.repartition(parts, col("b")).transform(Lineage.cut)
-    Lineage.release(symRaw)
+    // at the seed labels (cluster_id = id) a vertex's neighborhood
+    // minimum is its least neighbor id: the first superstep needs no join
     val labels = minLabelFixpoint(
         sym.select(col("a").as("id")).distinct().withColumn("cluster_id", col("id")),
-        maxSupersteps) { frontier =>
-      sym.join(frontier, sym("b") === frontier("id"))
-        .groupBy(sym("a").as("nid"))
-        .agg(min(frontier("cluster_id")).as("nmin"))
+        sym.groupBy(col("a").as("nid")).agg(min(col("b")).as("nmin")), maxSupersteps) {
+      frontier =>
+        sym.join(frontier, sym("b") === frontier("id"))
+          .groupBy(sym("a").as("nid"))
+          .agg(min(frontier("cluster_id")).as("nmin"))
     }
     Lineage.release(sym)
     labels.select(col("id"), col("cluster_id"))

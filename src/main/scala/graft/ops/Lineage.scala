@@ -40,24 +40,29 @@ object Lineage {
     * only the final, post-exchange stage is deferred — it runs, and
     * stores the cut's blocks, inside the next action that reads the
     * cut. A cut over a plan with no exchange runs nothing at the call.
-    * Per superstep of `Dedup.minLabelFixpoint` that is 3 SQL
-    * executions and ~9 jobs on the benchmark's `corpus_dedup` workload,
-    * not one. Fixed-round loops with no mid-loop action measured faster
-    * lazy in round 7 (q143/q160/q161, SCALE.md). Convergence-style loops
-    * with an action per round (e.g. [[Dedup.clusters]]) still prefer
-    * lazy: the round-8 directed A/B (SCALE.md r8 #1) measured eager cuts
-    * 1.5–3× slower across the clusters family (q94 8.3→24.2 s, q190
-    * 8.3→18.1 s, q65 2.9→9.8 s at sf0.1) — the eager localCheckpoint
-    * also runs the final stage as its OWN job and the fixpoint-sum
-    * action then reads the stored blocks, i.e. one extra scheduled job
-    * plus one extra block write/read per round, where the lazy form runs
-    * that stage inside the sum job it already runs. The benign `BlockManager:
-    * Block rdd_X already exists` warnings in bench tails are the lazy
-    * first-action path double-reporting a stored partition, not
-    * recomputation. Under `spark.graft.checkpoint.reliable=true` this
-    * stays EAGER: per-round durability is the entire point of the
-    * reliable path, a lazy reliable cut would persist nothing until the
-    * final action.
+    *
+    * Lazy fits a frame that a later action of the same loop reads
+    * anyway: the fixed-round loops of [[Graph]] and [[Bpe]] (measured
+    * faster lazy in round 7, q143/q160/q161, SCALE.md) and the
+    * post-probe frame of `Dedup.minLabelFixpoint`, whose final stage runs
+    * inside the eager cut of the same superstep. Made eager, that frame
+    * costs a job more per superstep (9 against 8 on `FixpointSpec`'s
+    * chain fixture at `local[4]`, same shuffle bytes): its final stage
+    * runs as a job of its own and its blocks are read back by the next
+    * one. Where the loop needs an action per round anyway, cut eagerly
+    * and let the cut be the action: `minLabelFixpoint`'s halved state is
+    * an eager [[cut]] that carries the round's convergence count as an
+    * observed metric. (The round-8 finding that eager cuts ran 1.5–3×
+    * slower in convergence loops compared an eager cut followed by a
+    * separate label-sum query against a lazy cut materialized inside
+    * that query: the eager form paid a job and a block write/read more
+    * per round; with the count riding on the cut, no second query
+    * runs.) The benign `BlockManager: Block rdd_X
+    * already exists` warnings in bench tails are the lazy first-action
+    * path double-reporting a stored partition, not recomputation. Under
+    * `spark.graft.checkpoint.reliable=true` this stays EAGER: per-round
+    * durability is the entire point of the reliable path, a lazy
+    * reliable cut would persist nothing until the final action.
     */
   def cutLazy(df: DataFrame): DataFrame = cutImpl(df, eager = false)
 

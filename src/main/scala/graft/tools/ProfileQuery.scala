@@ -1,13 +1,19 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-job profiler for one catalog query: runs the named queries once
   * (after a warm-up) with a listener that records every job's wall time
   * and description, then prints the jobs sorted by cost — the "which
   * job inside this 9-second query is the expensive one" attribution
   * step (guide §1.1 empirical loop) that QuickPerf's single wall number
-  * can't answer. Not part of the driver contract.
+  * can't answer. Per query it also prints how many classes Janino
+  * compiled and the compile time: a recompile means the generated class
+  * fell out of Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
+  * sized in [[graft.Session]]). Name a query twice to see whether its
+  * second run compiles again. Not part of the driver contract.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -47,13 +53,18 @@ object ProfileQuery {
     graft.SparkEntry.queries("q01_gold_flagship")(spark, sfDir).collect()
     for (n <- names) {
       jobs.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val cnt = graft.SparkEntry.queries(n)(spark, sfDir).collect().length
       graft.ops.Dedup.releaseCaches()
       val sec = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
       // listener events are posted asynchronously; give the bus a beat
       Thread.sleep(300)
       println(f"PROFILE $n rows=$cnt total=${sec}%.3f s")
+      println(f"  codegen compiles=$compiles janino=${compileSec}%.3f s")
       import scala.jdk.CollectionConverters._
       val js = jobs.values.asScala.toSeq.sortBy(_.id)
       val totalJobMs = js.filter(_.end > 0).map(j => j.end - j.start).sum

@@ -1,7 +1,10 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusBridge
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The connected-components fixpoints ([[Dedup.simhashClusters]],
   * [[Dedup.clusters]]) against a driver-side union-find, on fixtures
@@ -105,14 +108,136 @@ class FixpointSpec extends SparkSpec {
       leaked.map(id => sc.getPersistentRDDs(id).toDebugString.take(300)))
   }
 
-  // Upper bounds on the fixtures above (6 supersteps each; measured 96
-  // and 114 jobs on a local[4] session). A second evaluation of the probe
-  // inside a superstep (both sides of the pointer-halving join
-  // recomputing it: 177 jobs for simhashClusters) or an extra join per
-  // superstep adds its stages' jobs to every superstep and breaks the
-  // bound, as does counting the reps for a 4-partition session (98).
-  private val SimhashJobs = 97
-  private val ClustersJobs = 115
+  /** Supersteps run by the fixpoints in `body`: each superstep's cut
+    * carries exactly one observed convergence certificate. */
+  private def supersteps(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.observedMetrics.nonEmpty) n.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusBridge.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusBridge.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    n.get
+  }
+
+  // Superstep counts of the fixtures as measured with the label-sum
+  // certificate the observed count replaced (labels only decrease, so
+  // "no label dropped" and "label sum unchanged" stop at the same step).
+  test("fixpoints run as many supersteps as the label-sum loop did") {
+    def steps(body: => DataFrame): Int = supersteps { body.collect(); Dedup.releaseCaches() }
+    val small = Seq((9L, 1L), (1L, 2L), (2L, 3L), (5L, 7L)).toDF("id1", "id2")
+    assert(steps(Dedup.simhashClusters(chainFp, maxHammingDistance = 1, maxSupersteps = 20)) == 11)
+    assert(steps(Dedup.simhashClusters(chainFp, maxHammingDistance = 1)) == 10)
+    assert(steps(Dedup.simhashClusters(chainFp, maxHammingDistance = 3)) == 5)
+    assert(steps(Dedup.clusters(pathPairs)) == 12)
+    assert(steps(Dedup.clusters(small)) == 2)
+  }
+
+  test("an empty vertex set converges in one superstep and returns no rows") {
+    var rows = -1
+    assert(supersteps {
+      rows = Dedup.simhashClusters(chainFp.limit(0), maxHammingDistance = 1).collect().length
+      Dedup.releaseCaches()
+    } == 1)
+    assert(rows == 0)
+    assert(supersteps {
+      rows = Dedup.clusters(pathPairs.limit(0)).collect().length
+      Dedup.releaseCaches()
+    } == 1)
+    assert(rows == 0)
+  }
+
+  test("reliable checkpoints deliver every convergence certificate") {
+    val ids = chainDocs.map(_._1)
+    val simhashExpected = collectLabels(Dedup.simhashClusters(chainFp, maxHammingDistance = 1))
+    val clustersExpected = collectLabels(Dedup.clusters(pathPairs))
+    Dedup.releaseCaches()
+    val sc = spark.sparkContext
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_fixpoint_ckpt")
+    val hadDir = sc.getCheckpointDir
+    sc.setCheckpointDir(ckptDir.toString)
+    spark.conf.set(Lineage.ReliableConfKey, "true")
+    // a certificate that never arrives would block its superstep for
+    // good: run under a deadline so that fails by name instead
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val run = pool.submit(() => {
+        val s = collectLabels(Dedup.simhashClusters(chainFp, maxHammingDistance = 1))
+        val c = collectLabels(Dedup.clusters(pathPairs))
+        Dedup.releaseCaches()
+        (s, c)
+      })
+      val (s, c) = run.get(300, java.util.concurrent.TimeUnit.SECONDS)
+      assert(s == simhashExpected && s.keySet == ids.toSet)
+      assert(c == clustersExpected)
+      val wrote = java.nio.file.Files.walk(ckptDir)
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, "reliable mode must write to the checkpoint dir")
+    } finally {
+      pool.shutdownNow()
+      spark.conf.unset(Lineage.ReliableConfKey)
+      sc.setCheckpointDir(hadDir.orNull)
+    }
+  }
+
+  test("concurrent fixpoint calls release only their own pins") {
+    Dedup.releaseCaches()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val simhashExpected = collectLabels(Dedup.simhashClusters(chainFp, maxHammingDistance = 1))
+    val clustersExpected = collectLabels(Dedup.clusters(pathPairs))
+    Dedup.releaseCaches()
+    // the clusters call releases its pins while the simhash call's lazy
+    // result, backed by its pinned final state, is still unread
+    val built = new java.util.concurrent.CyclicBarrier(2)
+    val released = new java.util.concurrent.CyclicBarrier(2)
+    var simhashGot, clustersGot = Map.empty[Long, Long]
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def thread(body: => Unit) = new Thread(() =>
+      try body catch { case t: Throwable => errors.add(t); built.reset(); released.reset() })
+    val threads = Seq(
+      thread {
+        val result = Dedup.simhashClusters(chainFp, maxHammingDistance = 1)
+        built.await()
+        released.await()
+        simhashGot = collectLabels(result)
+        Dedup.releaseCaches()
+      },
+      thread {
+        val result = Dedup.clusters(pathPairs)
+        clustersGot = collectLabels(result)
+        built.await()
+        Dedup.releaseCaches()
+        released.await()
+      })
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toArray.map(_.toString).mkString("\n"))
+    assert(simhashGot == simhashExpected)
+    assert(clustersGot == clustersExpected)
+    assert(Dedup.pinnedCacheCount == 0)
+    val leaked = sc.getPersistentRDDs.keys.filterNot(before.contains)
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  // Upper bounds on the fixtures above (measured 84 and 96 jobs on a
+  // local[4] session; 96 and 114 with a label-sum query per superstep).
+  // A second evaluation of the probe inside a superstep (both sides of
+  // the pointer-halving join recomputing it), an extra join or a separate
+  // convergence query per superstep adds its jobs to every superstep and
+  // breaks the bound, as does counting the reps for a 4-partition
+  // session.
+  private val SimhashJobs = 85
+  private val ClustersJobs = 97
+  // Shuffle bytes of simhashClusters on the chain fixture (measured
+  // 42 088). The first superstep probes the chunk table at the seed
+  // labels with no exchange; shuffling every rep's chunk projection into
+  // it again, as the first frontier, wrote 44 912.
+  private val SimhashShuffleBytes = 43000L
 
   test("simhashClusters job count stays within its bound") {
     val jobs = Footprint.of(spark) {
@@ -120,6 +245,15 @@ class FixpointSpec extends SparkSpec {
       Dedup.releaseCaches()
     }.jobs
     assert(jobs <= SimhashJobs, s"simhashClusters launched $jobs jobs > $SimhashJobs")
+  }
+
+  test("simhashClusters shuffle bytes stay within their bound") {
+    val bytes = Footprint.of(spark) {
+      Dedup.simhashClusters(chainFp, maxHammingDistance = 1).collect()
+      Dedup.releaseCaches()
+    }.shuffleBytes
+    assert(bytes <= SimhashShuffleBytes,
+      s"simhashClusters wrote $bytes shuffle bytes > $SimhashShuffleBytes")
   }
 
   test("clusters job count stays within its bound") {

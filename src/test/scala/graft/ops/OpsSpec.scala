@@ -93,27 +93,59 @@ class OpsSpec extends SparkSpec {
 
   test("concurrent releaseCaches leave no pinned frame cached") {
     // Each thread pins a chain of frames, each built on the one before and
-    // none stored yet, and drains the shared queue, so the threads release
-    // each other's frames: uncaching a frame while another thread
-    // releases a frame built on it must not leave the latter cached.
+    // none stored yet, puts them on a shared queue and releases whatever
+    // it takes from that queue, so the threads release each other's
+    // frames: uncaching a frame while another thread releases a frame
+    // built on it must not leave the latter cached.
     Dedup.releaseCaches()
     val pinned = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val shared = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
     val base = spark.range(0, 1000).toDF("id")
     val threads = (1 to 4).map { t =>
       new Thread(() => (1 to 25).foreach { i =>
         val a = Dedup.pin(base.filter(col("id") % (100 * t + i) === 0))
         val b = Dedup.pin(a.select((col("id") * 2).as("x")))
         val c = Dedup.pin(b.filter(col("x") > 2))
-        Seq(a, b, c).foreach(pinned.add)
+        Seq(a, b, c).foreach { df => pinned.add(df); shared.add(df) }
+        var df = shared.poll()
+        while (df != null) { Lineage.release(df); df = shared.poll() }
         Dedup.releaseCaches()
       })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
-    Dedup.releaseCaches()
     val stillCached = pinned.toArray(Array.empty[org.apache.spark.sql.DataFrame])
       .count(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     assert(stillCached == 0)
+  }
+
+  test("releaseCaches drops only the calling thread's pins") {
+    Dedup.releaseCaches()
+    val childPinned = new java.util.concurrent.CountDownLatch(1)
+    val parentReleased = new java.util.concurrent.CountDownLatch(1)
+    var parentDropped, childSaw, childDropped = -1
+    var cachedAfterParent = false
+    // a parent thread that has never pinned starts a child that pins
+    val parent = new Thread(() => {
+      val child = new Thread(() => {
+        val df = Dedup.pin(spark.range(0, 10).toDF("id"))
+        childPinned.countDown()
+        parentReleased.await()
+        cachedAfterParent = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+        childSaw = Dedup.pinnedCacheCount
+        childDropped = Dedup.releaseCaches()
+      })
+      child.start()
+      childPinned.await()
+      parentDropped = Dedup.releaseCaches()
+      parentReleased.countDown()
+      child.join()
+    })
+    parent.start()
+    parent.join()
+    assert(parentDropped == 0)
+    assert(cachedAfterParent)
+    assert(childSaw == 1 && childDropped == 1)
   }
 
   test("simhash near-dup: identical-token docs at distance 0") {
